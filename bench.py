@@ -59,13 +59,13 @@ HEADLINE = [
     # Round-9 additions (round-8 verdict task 6): the operator tier whose
     # regressions the next rounds most need to see. x36's wall time
     # includes its 12 driver-synchronized GD rounds and x38's includes
-    # the strategy probe — a scheduler-latency component rides along,
+    # its model checkpoint — a scheduler-latency component rides along,
     # but a REGRESSION in either (an extra corpus scan, a lost
     # checkpoint) still shows as a step change in the band, which is
     # what surveillance is for. All three sit in `later_added`, so the
     # 19-query comparable subtotal is untouched.
     "x36_quality_classifier",  # hashed-BoW logreg: 12 GD rounds + score
-    "x38_bigram_lm_score",     # bigram LM train+score (two-strategy)
+    "x38_bigram_lm_score",     # bigram LM train+checkpoint+join score
     # Round-10 swap (r9 verdict task 3): the bench lane now measures the
     # PRODUCTION search path (candidates + rerank). The old lane entry,
     # x5_knn_jl_sq8, carries a brute-force exact ground-truth pass and

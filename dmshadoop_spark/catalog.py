@@ -71,12 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql usage)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def widen(df: DataFrame) -> DataFrame:
     """Round-robin repartition a *narrow* small-scan DataFrame to cluster
     width before a CPU-bound expression stage (shingling, hashing,
@@ -96,17 +90,6 @@ def widen(df: DataFrame) -> DataFrame:
     return df
 
 
-def _parse_byte_conf(value: str) -> int:
-    """Parse a Spark byte-size conf string ("134217728b", "128m", "1g")."""
-    import re
-
-    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", value.strip().lower())
-    if not m:
-        return 128 * 1024 * 1024
-    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    return int(m.group(1)) * mult[m.group(2)]
-
-
 def _estimated_scan_splits(df: DataFrame) -> int | None:
     """Estimate how many scan partitions ``df``'s file sources will yield,
     WITHOUT building a physical plan or an RDD (``df.rdd`` forces both —
@@ -123,15 +106,22 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
     import os
     from urllib.parse import urlparse
 
+    from dmshadoop_spark.functions.checkpoint import _parse_bytes
+
     try:
         files = df.inputFiles()
     except Exception:
         return None
     if not files:
         return None
-    max_bytes = _parse_byte_conf(
-        str(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
-    )
+    try:
+        max_bytes = _parse_bytes(
+            df.sparkSession.conf.get(
+                "spark.sql.files.maxPartitionBytes", "134217728b"
+            )
+        )
+    except ValueError:
+        max_bytes = 128 * 1024 * 1024
     splits = 0
     for f in files:
         parsed = urlparse(f)

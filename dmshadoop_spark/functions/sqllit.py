@@ -3,13 +3,13 @@
 
 Why: building an expression with per-element ``F.lit``/``F.array``
 Columns costs a py4j round trip per node on the DRIVER (~1 ms each), so
-a k×dim centroid matrix or a 1000-entry probability map burns hundreds
-of milliseconds before Spark sees the query — per call, and per round
-in iterative loops. Rendering the same tree as one SQL string moves the
-construction into the JVM parser. Equivalence is exact: ``repr`` of a
-Python float is its shortest round-trip form and the SQL parser's
-``...D`` double literal parses it back to the identical bits, so every
-pinned digest downstream is unchanged.
+a k×dim centroid matrix burns hundreds of milliseconds before Spark sees
+the query — per call, and per round in iterative loops. Rendering the
+same tree as one SQL string moves the construction into the JVM parser.
+Equivalence is exact: ``repr`` of a Python float is its shortest
+round-trip form and the SQL parser's ``...D`` double literal parses it
+back to the identical bits, so every pinned digest downstream is
+unchanged.
 """
 
 from __future__ import annotations
@@ -41,45 +41,3 @@ def sql_double(x: float) -> str:
 def sql_double_array(values) -> str:
     """``array(...)`` of exact double literals."""
     return "array(" + ",".join(sql_double(x) for x in values) + ")"
-
-
-_ESCAPES = {
-    "\\": "\\\\",
-    "'": "\\'",
-    "\n": "\\n",
-    "\r": "\\r",
-    "\t": "\\t",
-    "\0": "\\0",
-}
-
-
-def sql_str(s: str) -> str:
-    """A single-quoted SQL string literal evaluating to exactly ``s``
-    (backslash escapes are live under Spark's default parser mode —
-    call ``assert_escaped_literals_off`` once per rendered expression;
-    see below)."""
-    return "'" + "".join(_ESCAPES.get(c, c) for c in s) + "'"
-
-
-def assert_escaped_literals_off(spark) -> None:
-    """Fail LOUDLY when ``spark.sql.parser.escapedStringLiterals`` is on
-    (round-12 advice): under that non-default mode the ``\\n``/``\\t``
-    escapes ``sql_str`` emits stay literal two-character sequences, so a
-    rendered map's keys would silently change value — corruption, not an
-    error. Call once per rendered expression (NOT per literal — a conf
-    get is a py4j round trip, the exact per-node cost this module
-    removes)."""
-    if (
-        spark is not None
-        and str(
-            spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        ).lower()
-        == "true"
-    ):
-        raise ValueError(
-            "sql_str renders backslash escapes that are only live under "
-            "spark.sql.parser.escapedStringLiterals=false (the default); "
-            "this session sets it true, which would silently corrupt "
-            "rendered string literals. Unset it, or build this expression "
-            "with F.lit columns instead."
-        )

@@ -5882,16 +5882,6 @@ def x37_jl_projection(spark, sf_dir):
     ).select("vec_id", F.col("dim_k").cast("long").alias("dim_k"), "proj")
 
 
-# x38 literal/join switch (the similarity/assign.py pattern): the trained
-# bigram-probability table rides the plan as a create_map literal only
-# while it stays below this bound; above it — or if any token contains the
-# literal map-key separator — scoring flips to an equi-join on the exact
-# (w1, w2) key: no driver collect, O(1) plan size in the model, the
-# open-vocab 100 TB path. Tests force 0 to pin path equivalence.
-X38_LITERAL_MAX_BIGRAMS = 4096
-_X38_KEY_SEP = "|"
-
-
 @query(
     "x38_bigram_lm_score",
     oracle="""
@@ -5931,32 +5921,24 @@ def x38_bigram_lm_score(spark, sf_dir):
     + a position-ordered left fold — bit-identical in DuckDB, so a
     TRAINED statistical model sits under a FULL value oracle.
 
-    One semantics, two physical scoring strategies picked by model size
-    (the similarity/assign.py centroid pattern, round-7 verdict task 1):
+    Scoring is an equi-join of the exploded (doc, pos, w1, w2) bigrams
+    against the trained (w1, w2) → probability table on the exact pair
+    key: nothing is collected to the driver and the plan size is O(1) in
+    the model, so the same plan serves a 31-word test vocabulary and an
+    open 100 TB one. The model is broadcast while its measured size is
+    under ``spark.sql.autoBroadcastJoinThreshold`` and shuffle-joined
+    beyond. The per-doc fold re-assembles the position order (array_sort
+    on (pos, p)), so the doubles are BIT-identical at any
+    shuffle-partition count — pinned by test_bigram_lm_partition_invariant.
 
-    * bigram table ≤ ``X38_LITERAL_MAX_BIGRAMS`` AND no token contains
-      the map-key separator — probabilities ride the plan as a
-      ``create_map`` literal; scoring is a scan-local fold, zero
-      shuffles past the two count aggs (this corpus: 31-word vocab →
-      ≤961 entries).
-    * above the bound (or on a separator collision) — the open-vocab
-      100 TB path: scoring is an equi-join of the exploded (doc, pos,
-      w1, w2) bigrams against the exact (w1, w2)-keyed count table —
-      nothing is collected to the driver and the plan size is O(1) in
-      the model; AQE broadcasts the model while it fits and falls back
-      to a shuffle hash join beyond. The per-doc fold re-assembles the
-      position order (array_sort on (pos, p)) so both paths produce
-      BIT-IDENTICAL doubles — pinned by
-      test_bigram_lm_join_path_matches_literal at two partition counts.
-
-    The probability itself is one IEEE double division of exactly
-    representable integer counts in either path (and in the oracle), so
-    the value hash is path-independent by construction."""
+    The probability is one IEEE double division of exactly representable
+    integer counts, the same as the oracle's, so the value hash is
+    engine-independent by construction."""
     from dmshadoop_spark.catalog import widen
 
-    # widen(): the bigram explode, the vocab distinct, and the final
-    # scan-local scoring fold otherwise all run on the single-file
-    # scan's one partition (no-op at scale — catalog.widen docstring)
+    # widen(): the tokenize and bigram explode otherwise run on the
+    # single-file scan's one partition (no-op at scale — catalog.widen
+    # docstring)
     docs = widen(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", tokenize("text").alias("t")
@@ -5976,84 +5958,21 @@ def x38_bigram_lm_score(spark, sf_dir):
         F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     ).agg(F.count(F.lit(1)).alias("c"))
 
-    # Bounded probe: collect at most threshold+1 rows to decide the
-    # strategy (never the open-vocab table). The separator check closes
-    # the duplicate-map-key hazard: a token containing '|' would alias
-    # two distinct (w1, w2) keys in the literal map, so such corpora
-    # route to the join path, which keys on the exact pair.
-    head = (
-        bc_df.limit(X38_LITERAL_MAX_BIGRAMS + 1).collect()
-        if X38_LITERAL_MAX_BIGRAMS > 0
-        else []
-    )
-    use_literal = 0 < len(head) <= X38_LITERAL_MAX_BIGRAMS and not any(
-        _X38_KEY_SEP in r["w1"] or _X38_KEY_SEP in r["w2"] for r in head
-    )
-
-    n_bigrams = F.greatest(F.col("n") - 1, F.lit(0)).cast("long")
-
-    if use_literal:
-        bc = {(r["w1"], r["w2"]): r["c"] for r in head}
-        uc: dict[str, int] = {}
-        for (w1, _w2), c in bc.items():
-            uc[w1] = uc.get(w1, 0) + c
-        vocab = (
-            toks.select(F.explode("t").alias("tk"))
-            .select("tk")
-            .distinct()
-            .count()
-        )
-        # Probabilities precomputed in Python: (c+1)/(u+V) is one IEEE
-        # double division — identical to the oracle's and to the join
-        # path's JVM-side division of the same exact integers. The map
-        # literal is rendered as ONE SQL string through one F.expr call
-        # (functions/sqllit.py): the create_map(*2·|bigrams| F.lit
-        # Columns) form cost a py4j round trip per node — ~2 s of
-        # driver time at the 961-entry operating point — before any
-        # execution. Same keys (escaped exactly), same doubles.
-        from dmshadoop_spark.functions.sqllit import (
-            assert_escaped_literals_off,
-            sql_double,
-            sql_str,
-        )
-
-        # one conf check per rendered map (round-12 advice): under
-        # escapedStringLiterals=true the rendered keys would silently
-        # change value — fail loudly instead
-        assert_escaped_literals_off(toks.sparkSession)
-        pmap_items = []
-        for (w1, w2), c in sorted(bc.items()):
-            pmap_items.append(sql_str(f"{w1}{_X38_KEY_SEP}{w2}"))
-            pmap_items.append(sql_double((c + 1.0) / (uc[w1] + float(vocab))))
-        pmap = F.expr(f"map({','.join(pmap_items)})")
-        probs = F.transform(
-            bgs,
-            lambda b: F.element_at(
-                pmap, F.concat_ws(_X38_KEY_SEP, b["w1"], b["w2"])
-            ),
-        )
-        return toks.select(
-            "doc_id",
-            n_bigrams.alias("n_bigrams"),
-            F.when(
-                F.col("n") >= 2,
-                F.aggregate(probs, F.lit(0.0), lambda acc, x: acc + x)
-                / (F.col("n") - 1).cast("double"),
-            ).alias("lm_score"),
-        )
-
-    # Join path. The trained model — (w1, w2) → smoothed probability — is
-    # assembled ONCE: left-context counts derive from the bigram table
-    # (sum of c over w2 ≡ count of bigrams with that w1 — the oracle's uc
-    # CTE), V is a one-row broadcast scalar, and the probability is the
-    # same IEEE division of exact integer counts as the literal path's.
-    # The model is vocab-bounded (rows = distinct corpus bigrams), so the
-    # eager stabilize materializes a SMALL table and collapses the
-    # scoring plan to ONE corpus scan (without it the model's two agg
-    # subtrees + V re-plan the tokenize scan — 5 corpus scans measured at
-    # the round-8 audit). stabilize() picks the storage: reliable
-    # .checkpoint() when sc.setCheckpointDir(...) is set (survives
-    # executor loss), executor-local localCheckpoint otherwise.
+    # The trained model — (w1, w2) → smoothed probability — is assembled
+    # ONCE: left-context counts derive from the bigram table (sum of c
+    # over w2 ≡ count of bigrams with that w1 — the oracle's uc CTE), V is
+    # a one-row broadcast scalar, and the probability is the oracle's IEEE
+    # division of exact integer counts. The model is vocab-bounded (rows =
+    # distinct corpus bigrams), so the eager stabilize materializes a
+    # SMALL table and collapses the scoring plan to ONE corpus scan
+    # (without it the model's two agg subtrees + V re-plan the tokenize
+    # scan — 5 corpus scans measured at the round-8 audit). stabilize()
+    # picks the storage: reliable .checkpoint() when
+    # sc.setCheckpointDir(...) is set (survives executor loss),
+    # executor-local localCheckpoint otherwise. hint_small: the
+    # checkpoint drops the plan's size estimate, so without the measured
+    # broadcast hint the scoring join shuffles and sorts every corpus
+    # bigram even when the model is a few KB.
     uc_df = bc_df.groupBy("w1").agg(F.sum("c").alias("u"))
     v_df = (
         toks.select(F.explode("t").alias("tk"))
@@ -6063,11 +5982,11 @@ def x38_bigram_lm_score(spark, sf_dir):
     pr = (F.col("c").cast("double") + F.lit(1.0)) / (
         F.col("u").cast("double") + F.col("v").cast("double")
     )
-    model = (
+    model = stabilize(
         bc_df.join(uc_df, ["w1"])
         .crossJoin(F.broadcast(v_df))
-        .select("w1", "w2", pr.alias("pr"))
-        .transform(stabilize)
+        .select("w1", "w2", pr.alias("pr")),
+        hint_small=True,
     )
     # posexplode_outer keeps n<2 docs (one NULL-position row) so the
     # grouped result covers every document without a join back to toks;
@@ -6079,8 +5998,8 @@ def x38_bigram_lm_score(spark, sf_dir):
     ).join(model, ["w1", "w2"], "left")
     # Re-assemble each document's probabilities in POSITION order before
     # folding — collect_list order is partitioning-dependent, the
-    # array_sort on (i, pr) is not, so the left fold replays the literal
-    # path's (and the oracle's) exact double-addition sequence.
+    # array_sort on (i, pr) is not, so the left fold replays the oracle's
+    # exact double-addition sequence.
     per_doc = scored.groupBy("doc_id").agg(
         F.count("i").alias("n_bigrams"),
         F.aggregate(

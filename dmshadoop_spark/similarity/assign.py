@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 LITERAL_MAX_CENTROIDS = 256
@@ -67,17 +67,22 @@ def _dist_arr(vec_col: str, cents: np.ndarray) -> Column:
     # column literally named `c`/`x`/`acc` would be shadowed inside the
     # lambda body (zip_with(c, c, ...) computes all-zero distances and
     # silently assigns every row to cell 1). `__` names cannot collide:
-    # with_nearest_cell/with_probe_cells reject them up front.
-    if vec_col.startswith("__"):
-        raise ValueError(
-            f"vec_col {vec_col!r}: '__'-prefixed names are reserved for "
-            "the rendered lambda variables"
-        )
+    # _check_vec_col rejects them up front.
     mat = "array(" + ",".join(_sql_double_array(row) for row in cents) + ")"
     return F.expr(
         f"transform({mat}, __cent -> aggregate(zip_with(`{vec_col}`, __cent,"
         f"(__x,__y)->(__x-__y)*(__x-__y)), 0.0D, (__acc,__x)->__acc+__x))"
     )
+
+
+def _check_vec_col(vec_col: str) -> None:
+    """Reject ``__``-prefixed vector columns on every assignment path, so
+    a name valid under one k (or ``vectorized``) is valid under all."""
+    if vec_col.startswith("__"):
+        raise ValueError(
+            f"vec_col {vec_col!r}: '__'-prefixed names are reserved for "
+            "the rendered lambda variables"
+        )
 
 
 def _dist_chunks(
@@ -122,6 +127,7 @@ def with_nearest_cell(
     a near-tie argmin can land differently — callers with PINNED outputs
     must not flip paths (the default keeps today's threshold pick);
     callers that OWN their operating point (semdedup k="auto") opt in."""
+    _check_vec_col(vec_col)
     use_literal = (
         len(cents) <= LITERAL_MAX_CENTROIDS
         if vectorized is None
@@ -134,8 +140,7 @@ def with_nearest_cell(
             F.array_position(F.col("_d"), F.array_min(F.col("_d"))),
         ).drop("_d")
 
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(
+    bc = df.sparkSession.sparkContext.broadcast(
         np.ascontiguousarray(cents, dtype=np.float64)
     )
 
@@ -247,7 +252,7 @@ def with_nearest_cell_coarse(
     the opt-in final-assignment strategy for callers that own their
     operating point (semdedup(assign="coarse"))."""
     coarse, perm, offs = coarse_quantize(cents, n_coarse=n_coarse)
-    spark = SparkSession.getActiveSession()
+    spark = df.sparkSession
     bc_fine = spark.sparkContext.broadcast(
         np.ascontiguousarray(cents, dtype=np.float64)[perm]
     )
@@ -336,6 +341,7 @@ def with_probe_cells(
 ) -> DataFrame:
     """Append the array of the ``nprobe`` nearest cell ids, ranked by
     (distance, cell) ascending."""
+    _check_vec_col(vec_col)
     if len(cents) <= LITERAL_MAX_CENTROIDS:
         ranked = F.array_sort(
             F.zip_with(
@@ -349,8 +355,7 @@ def with_probe_cells(
             F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"]),
         )
 
-    spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(
+    bc = df.sparkSession.sparkContext.broadcast(
         np.ascontiguousarray(cents, dtype=np.float64)
     )
     n_take = nprobe

@@ -516,30 +516,20 @@ def test_components_checkpoint_edges_once(spark):
     assert rows[1] == 0 and rows[11] == 10
 
 
-def test_bigram_lm_no_literal_map_above_threshold(spark, sf_dir, monkeypatch):
-    """x38 above its literal bound must NOT embed the bigram table as a
-    create_map plan literal (round-7 verdict: driver OOM + unserializable
-    plan at open vocab) — the optimized plan carries joins on the exact
-    (w1, w2) key instead. Below the bound the literal map is the point."""
+def test_bigram_lm_no_literal_map_above_threshold(spark, sf_dir):
+    """x38 must NOT embed the bigram table as a map plan literal
+    (round-7 verdict: driver OOM + unserializable plan at open vocab) —
+    the optimized plan carries joins on the exact (w1, w2) key instead."""
     from dmshadoop_spark.queries import llm
 
-    monkeypatch.setattr(llm, "X38_LITERAL_MAX_BIGRAMS", 0)
-    join_plan = (
+    plan = (
         llm.x38_bigram_lm_score(spark, sf_dir)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
     )
-    assert "map(" not in join_plan, "bigram literal map leaked into join path"
-    assert "Join" in join_plan
-    monkeypatch.setattr(llm, "X38_LITERAL_MAX_BIGRAMS", 4096)
-    lit_plan = (
-        llm.x38_bigram_lm_score(spark, sf_dir)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "map(" in lit_plan  # the small-model fast path stays literal
+    assert "map(" not in plan, "bigram literal map leaked into the plan"
+    assert "Join" in plan
 
 
 def test_jl_sq8_candidate_stage_never_reads_wide_column(spark, sf_dir):

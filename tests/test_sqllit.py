@@ -47,26 +47,6 @@ def test_sql_double_bit_round_trip(spark):
         assert math.copysign(1.0, got) == math.copysign(1.0, ref), (i, x)
 
 
-def test_sql_str_escapes_round_trip(spark):
-    from dmshadoop_spark.functions.sqllit import sql_str
-
-    cases = [
-        "plain",
-        "with 'quotes'",
-        "back\\slash",
-        "tab\there",
-        "new\nline",
-        "cr\rhere",
-        "mixed \\' \n \t end",
-        "unicode é — ✓",
-        "",
-    ]
-    exprs = [F.expr(sql_str(s)).alias(f"s{i}") for i, s in enumerate(cases)]
-    row = spark.range(1).select(*exprs).collect()[0]
-    for i, s in enumerate(cases):
-        assert row[f"s{i}"] == s, (i, s, row[f"s{i}"])
-
-
 def test_dist_arr_matches_per_element_form(spark):
     """The one-expr transform distance array must be bit-identical to the
     per-element lit()/fold construction it replaced."""
@@ -188,33 +168,29 @@ def test_sql_double_nonfinite_round_trip(spark):
     assert arr[2] != arr[2]
 
 
-def test_assert_escaped_literals_off(spark):
-    """sql_str's escapes are only live under the default parser mode;
-    the assert must fire under escapedStringLiterals=true (silent key
-    corruption otherwise) and pass under the default."""
-    from dmshadoop_spark.functions.sqllit import (
-        assert_escaped_literals_off,
-    )
-
-    assert_escaped_literals_off(spark)  # default mode: no-op
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        with pytest.raises(ValueError, match="escapedStringLiterals"):
-            assert_escaped_literals_off(spark)
-    finally:
-        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
-
-
 def test_dist_arr_rejects_reserved_vec_col(spark):
     """Backticks do not prevent lambda-variable capture: a vector column
     named like a rendered lambda variable would be silently shadowed
-    (all-zero distances). The renderer uses __-prefixed variables and
-    refuses __-prefixed column names."""
-    from dmshadoop_spark.similarity.assign import _dist_arr, with_nearest_cell
+    (all-zero distances). The renderer uses __-prefixed variables, and
+    both assignment entry points refuse __-prefixed column names on
+    every path, so a name's validity never depends on k."""
+    from dmshadoop_spark.similarity.assign import (
+        LITERAL_MAX_CENTROIDS,
+        with_nearest_cell,
+        with_probe_cells,
+    )
 
     cents = np.ones((2, 3))
-    with pytest.raises(ValueError, match="reserved"):
-        _dist_arr("__cent", cents)
+    wide = np.ones((LITERAL_MAX_CENTROIDS + 1, 3))
+    bad = spark.createDataFrame([([1.0, 1.0, 1.0],)], "__cent array<double>")
+    for build in (
+        lambda: with_nearest_cell(bad, "__cent", cents),
+        lambda: with_nearest_cell(bad, "__cent", cents, vectorized=True),
+        lambda: with_probe_cells(bad, "__cent", cents, nprobe=1),
+        lambda: with_probe_cells(bad, "__cent", wide, nprobe=1),
+    ):
+        with pytest.raises(ValueError, match="reserved"):
+            build()
     # a column named plain 'c' (the OLD lambda variable) must now work
     df = spark.createDataFrame(
         [([0.9, 1.0, 1.1],), ([5.0, 5.0, 5.0],)], "c array<double>"
@@ -226,3 +202,29 @@ def test_dist_arr_rejects_reserved_vec_col(spark):
         .collect()
     ]
     assert got == [1, 2]
+
+
+def test_vectorized_assign_from_fresh_thread(spark):
+    """The vectorized path takes its session from the DataFrame, so a
+    thread with no active session (a pool worker) still plans it."""
+    import threading
+
+    from dmshadoop_spark.similarity.assign import with_nearest_cell
+
+    df = spark.createDataFrame(
+        [([0.9, 1.0, 1.1],), ([5.0, 5.0, 5.0],)], "v array<double>"
+    )
+    cents = np.array([[1.0, 1.0, 1.0], [5.0, 5.0, 5.0]])
+    out: dict = {}
+
+    def run():
+        try:
+            out["df"] = with_nearest_cell(df, "v", cents, vectorized=True)
+        except Exception as e:  # surfaced to the main thread below
+            out["err"] = e
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    assert "err" not in out, out.get("err")
+    assert [r["cell"] for r in out["df"].collect()] == [1, 2]
