@@ -485,6 +485,17 @@ def test_triangles_known_graphs(spark):
     assert triangles(cycle).count() == 0
 
 
+def test_parse_byte_conf():
+    """The maxPartitionBytes forms _estimated_scan_splits parses (its
+    junk-value default is checked in the widen test below)."""
+    from dmshadoop_spark.functions.checkpoint import _parse_bytes
+
+    assert _parse_bytes("134217728b") == 128 * 1024 * 1024
+    assert _parse_bytes("128m") == 128 * 1024 * 1024
+    assert _parse_bytes("128MB") == 128 * 1024 * 1024
+    assert _parse_bytes("1g") == 1 << 30
+
+
 def test_widen_probe_estimates_without_rdd(spark, sf_dir):
     """widen() must repartition the single-file test table to cluster
     width, estimate splits purely from inputFiles() (no RDD conversion),
